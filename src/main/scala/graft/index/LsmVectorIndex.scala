@@ -3,8 +3,6 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.TopK
-
 /** LSM-style generational vector index — the scale-safe streaming-ingest
   * form of the shard contract (reference: source/dehnsw.h:601-609, where a
   * full shard opens a new one; generational shards are that contract's
@@ -19,9 +17,10 @@ import graft.operators.TopK
   *    just the batch — work is O(batch) and the sealed base is untouched
   *    (object-identity guaranteed, spec-gated);
   *  - '''query''' probes the base and every generation and merges their
-  *    per-index top-k with the same partial/final merge the multi-shard
-  *    probe uses (top-k of a union == top-k of the per-member top-k
-  *    union, so exact-mode results equal one flat index — oracle-gated);
+  *    shards' top-k in the one merge every probe uses
+  *    ([[VectorIndex.mergeShardTopK]]; top-k of a union == top-k of the
+  *    per-member top-k union, so exact-mode results equal one flat
+  *    index — oracle-gated);
   *  - '''compact''' folds all generations into the base via the
   *    deterministic shard-scoped append once their total size crosses
   *    `compactThreshold`, bounding the generation count a probe pays for.
@@ -253,36 +252,31 @@ final class LsmVectorIndex private (
     }
   }
 
-  /** Batch kNN probe across base + generations — same contract and output
-    * schema as [[VectorIndex.query]] (searchWidth 0 = exact). Queries are
-    * routed once (collected once for the broadcast path, never collected
-    * for the driverless path) and each member index contributes at most k
-    * candidates per query to one final merge. */
+  /** Base and generations that hold vectors — the members a probe visits. */
+  private def members: Vector[VectorIndex] = (base +: generations).filter(_.meta.nonEmpty)
+
+  /** Batch kNN probe across base + generations — same contract, routing
+    * ([[VectorIndex.routeQueries]]) and output schema as
+    * [[VectorIndex.query]] (searchWidth 0 = exact). Each member shard
+    * contributes at most k candidates per query to one final merge. */
   def query(queries: DataFrame, k: Int, searchWidth: Int,
       maxBatch: Int = 100000): DataFrame = {
-    val members = (base +: generations).filter(_.meta.nonEmpty)
-    val spark = base.rows.sparkSession
-    import spark.implicits._
-    if (members.isEmpty) {
-      return spark.emptyDataset[(Long, Int, Long, Double)]
-        .toDF("query_id", "rank", "neighbor_id", "distance")
-    }
-    if (members.size == 1 && tombstones.isEmpty)
-      return members.head.query(queries, k, searchWidth, maxBatch)
-    val qds = queries
-      .select(col("query_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-    val probeCount = qds.select(col("query_id")).limit(maxBatch + 1).count()
-    if (probeCount <= maxBatch)
-      queryBatch(qds.collect().sortBy(_._1), k, searchWidth, maxBatch)
-    else {
+    val ms = members
+    if (ms.isEmpty) return VectorIndex.emptyResult(base.rows.sparkSession)
+    if (ms.size == 1 && tombstones.isEmpty)
+      return ms.head.query(queries, k, searchWidth, maxBatch)
+    VectorIndex.routeQueries(queries, maxBatch)(
+      queryBatch(_, k, searchWidth, maxBatch)) {
       // kernel-level liveness filter: dead ids never enter any shard's
       // top-k, so every member returns its exact live top-k directly —
       // no k+tombstones overfetch (whose candidate volume grows with
       // the tombstone count), no post-filter. ONE broadcast shared by
       // every member's probe.
       val live = liveFilter
-      mergeMembers(members.map(_.queryDistributed(queries, k, searchWidth, live)), k)
+      val spark = base.rows.sparkSession
+      VectorIndex.mergeShardTopK(spark,
+        ms.map(_.distributedCandidates(queries, k, searchWidth, live)).reduce(_ union _),
+        k, VectorIndex.distributedMergeParts(spark, ms.map(_.numShards).max))
     }
   }
 
@@ -292,24 +286,18 @@ final class LsmVectorIndex private (
     * FUSED across members: the cached probe layouts of the base and every
     * generation are unioned (a narrow concatenation — no recompute, no
     * shuffle) and probed in ONE job; each task maps its union partition
-    * back to (member, local shard) through the broadcast shard offsets.
-    * One job chain + one merge instead of one per member — the per-probe
-    * fixed cost no longer grows with the generation count. */
+    * back to (member, local shard) through the shard offsets and reads
+    * that member's once-per-index metadata broadcast. One job and one
+    * merge instead of one per member — the per-probe fixed cost no longer
+    * grows with the generation count. */
   def queryBatch(batch: Array[(Long, Array[Float])], k: Int, searchWidth: Int,
       maxBatch: Int = 100000): DataFrame = {
-    val members = (base +: generations).filter(_.meta.nonEmpty)
+    val ms = members
     val spark = base.rows.sparkSession
-    import spark.implicits._
-    if (members.isEmpty) {
-      return spark.emptyDataset[(Long, Int, Long, Double)]
-        .toDF("query_id", "rank", "neighbor_id", "distance")
-    }
-    if (members.size == 1 && tombstones.isEmpty)
-      return members.head.queryBatch(batch, k, searchWidth, maxBatch)
-    if (batch.isEmpty) {
-      return spark.emptyDataset[(Long, Int, Long, Double)]
-        .toDF("query_id", "rank", "neighbor_id", "distance")
-    }
+    if (ms.isEmpty) return VectorIndex.emptyResult(spark)
+    if (ms.size == 1 && tombstones.isEmpty)
+      return ms.head.queryBatch(batch, k, searchWidth, maxBatch)
+    if (batch.isEmpty) return VectorIndex.emptyResult(spark)
     // the fused path broadcasts the raw chunk straight into
     // probePartition, bypassing VectorIndex.queryBatch's query transform —
     // apply it here (cosine normalization / MIPS zero-augmentation;
@@ -324,26 +312,21 @@ final class LsmVectorIndex private (
     // its exact live top-k, no tombstone overfetch
     val live = liveFilter
     // member m owns union partitions [offsets(m), offsets(m+1))
-    val offsets = members.map(_.numShards).scanLeft(0)(_ + _).toArray
-    val memberInfo = members.map(m =>
-      (m.indexId, m.params, m.meta.map(x => x.sub_index_id -> x).toMap)).toArray
-    val bcInfo = spark.sparkContext.broadcast((offsets, memberInfo))
-    val union = members.map(_.probeLayout).reduce(_ union _)
-    val candidateChunks = normBatch.grouped(math.max(maxBatch, 1)).map { chunk =>
+    val offsets = ms.map(_.numShards).scanLeft(0)(_ + _).toArray
+    val memberInfo = ms.map(m => (m.indexId, m.params, m.metaBc)).toArray
+    val union = ms.map(_.probeLayout).reduce(_ union _)
+    val candidates = normBatch.grouped(math.max(maxBatch, 1)).map { chunk =>
       val bcQueries = spark.sparkContext.broadcast(chunk)
-      val rdd = union.mapPartitions { rit =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val (offs, info) = bcInfo.value
+      union.mapPartitionsWithIndex { (pid, rit) =>
         var m = 0
-        while (m + 1 < offs.length && offs(m + 1) <= pid) m += 1
-        val (iid, params, metaMap) = info(m)
+        while (m + 1 < offsets.length && offsets(m + 1) <= pid) m += 1
+        val (iid, params, bcMeta) = memberInfo(m)
         VectorIndex.probePartition(
-          rit, iid, pid - offs(m), params, metaMap, bcQueries.value, k, searchWidth,
-          live)
+          rit, iid, pid - offsets(m), params, bcMeta.value, bcQueries.value, k,
+          searchWidth, live)
       }
-      spark.createDataset(rdd).toDF("query_id", "distance", "neighbor_id")
-    }.toSeq
-    mergeMembers(candidateChunks, k)
+    }.reduce(_ union _)
+    VectorIndex.mergeShardTopK(spark, candidates, k, base.numShards)
   }
 
   override def probeBatch(
@@ -388,17 +371,6 @@ final class LsmVectorIndex private (
     if (tombstones.isEmpty) return null
     val bc = tombstoneBc
     gid => java.util.Arrays.binarySearch(bc.value, gid) < 0
-  }
-
-  private def mergeMembers(perMember: Seq[DataFrame], k: Int): DataFrame = {
-    // no tombstone post-filter here: both callers thread the kernel
-    // liveness filter into every member probe, so no dead id can reach
-    // the merge — an isInCollection belt would re-serialize the whole
-    // tombstone set into every task's plan for zero filtering effect
-    val union = perMember
-      .map(_.select(col("query_id"), col("distance"), col("neighbor_id")))
-      .reduce(_ union _)
-    TopK.topKMerge(union, k)
   }
 
   /** Total vectors across base + generations. */

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.DistanceMetric
-import graft.operators.TopK
+import graft.operators.TopKBuffer
 
 /** Executor-local cache of rehydrated shard graphs, keyed by (index
   * identity, shard). Rebuilding the in-memory adjacency from IndexRows is
@@ -181,13 +181,17 @@ case class WidthCalibration(searchWidth: Int, targetRecall: Double, k: Int,
   *
   * Query: broadcast the query batch, probe every shard (the *intended*
   * multi-shard semantics of the commented `query_with_sub_index`,
-  * dehnsw.h:532-587), then one partial/final top-k merge instead of the
-  * reference's sequential distance-bound (deliberate divergence, SURVEY
-  * §2.1 O7 — a shared bound would serialize shard visits).
+  * dehnsw.h:532-587), then merge the shards' top-k lists instead of
+  * following the reference's sequential distance bound (deliberate
+  * divergence, SURVEY §2.1 O7 — a shared bound would serialize shard
+  * visits). Each shard task emits one record per query, its sorted top-k
+  * as primitive arrays, and one RDD shuffle folds a query's records into
+  * a bounded [[TopKBuffer]] ([[VectorIndex.mergeShardTopK]]):
+  * a probe of a driver-local batch over a resident index is one Spark job.
   *
   * Scale notes: each task holds one shard's adjacency (size subIndexBound —
   * pick it from executor memory); candidates shuffled are O(queries x
-  * shards x k) via TopKByDistance, never O(rows).
+  * shards x k), never O(rows).
   */
 class VectorIndex private (
     val params: IndexParams,
@@ -221,27 +225,16 @@ class VectorIndex private (
     * dehnsw.h:300-307): 0 = exact (per-shard brute-force scan — guaranteed
     * exhaustive, a strict strengthening of the reference's
     * connected-component walk); > 0 = ANN beam with early termination.
-    * Returns (query_id, rank, neighbor_id, distance). */
-  /** @param maxBatch query vectors broadcast per pass; bigger batches are
-    *                 chunked so a single broadcast never exceeds
-    *                 maxBatch x dim floats (executor-memory safety at
-    *                 scale), with all chunks merged in one final top-k. */
-  def query(queries: DataFrame, k: Int, searchWidth: Int, maxBatch: Int = 100000): DataFrame = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val qds = queries
-      .select(col("query_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-    // routing probe collects ONLY ids (column-pruned scan, 8 bytes/row
-    // bounded at maxBatch+1) — collecting whole rows here would ship up
-    // to maxBatch query VECTORS to the driver just to count them. Small
-    // batches then pay one more (full) collect; big batches never
-    // transit the driver at all — the driverless shuffled probe is also
-    // ~3x faster than chunked broadcasts at 200k queries.
-    val probeCount = qds.select(col("query_id")).limit(maxBatch + 1).count()
-    if (probeCount <= maxBatch) queryBatch(qds.collect().sortBy(_._1), k, searchWidth, maxBatch)
-    else queryDistributed(queries, k, searchWidth)
-  }
+    * Returns (query_id, rank, neighbor_id, distance).
+    *
+    * @param maxBatch query vectors broadcast per pass; a batch of at most
+    *                 maxBatch rows is broadcast whole, a bigger one takes
+    *                 the driverless [[queryDistributed]] probe
+    *                 ([[VectorIndex.routeQueries]]). */
+  def query(queries: DataFrame, k: Int, searchWidth: Int, maxBatch: Int = 100000): DataFrame =
+    VectorIndex.routeQueries(queries, maxBatch)(
+      queryBatch(_, k, searchWidth, maxBatch))(
+      queryDistributed(queries, k, searchWidth))
 
   /** Two-stage REFINED probe — the quantization-ceiling breaker: stage 1
     * pulls a per-query pool of `pool` candidates from this index
@@ -334,36 +327,38 @@ class VectorIndex private (
   @inline private def normalizeQuery(v: Array[Float]): Array[Float] =
     params.transformQueryVector(v)
 
+  /** Shard metadata by shard id, broadcast once per index object on first
+    * probe: meta never changes for an instance, so every probe of it (and
+    * every LSM handle it is a member of) shares one executor copy. */
+  @transient private[index] lazy val metaBc
+      : org.apache.spark.broadcast.Broadcast[Map[Int, ShardMeta]] =
+    rows.sparkSession.sparkContext.broadcast(meta.map(m => m.sub_index_id -> m).toMap)
+
   /** Probe with an already-materialized query batch (no collect) — used by
-    * the optimizer rewrite, where the query vector is a plan literal. */
+    * the optimizer rewrite, where the query vector is a plan literal.
+    * Batches over maxBatch are broadcast in maxBatch-sized chunks, all
+    * merged in one final top-k. */
   def queryBatch(
       queryBatch: Array[(Long, Array[Float])], k: Int, searchWidth: Int,
       maxBatch: Int = 100000): DataFrame = {
     val spark = rows.sparkSession
-    import spark.implicits._
-    if (queryBatch.isEmpty) {
-      return spark.emptyDataset[(Long, Int, Long, Double)]
-        .toDF("query_id", "rank", "neighbor_id", "distance")
-    }
-    val bcMeta = spark.sparkContext.broadcast(meta.map(m => m.sub_index_id -> m).toMap)
+    if (queryBatch.isEmpty) return VectorIndex.emptyResult(spark)
+    val bcMeta = metaBc
     val p = params
     val iid = indexId
     val normBatch = queryBatch.map { case (id, v) => (id, normalizeQuery(v)) }
-
-    val candidateChunks = normBatch.grouped(math.max(maxBatch, 1)).map { chunk =>
+    val candidates = normBatch.grouped(math.max(maxBatch, 1)).map { chunk =>
       val bcQueries = spark.sparkContext.broadcast(chunk)
-      val rdd = probeLayout.mapPartitions { rit =>
-        // partition index == shard id; when the shard's graph is already
+      probeLayout.mapPartitionsWithIndex { (shardId, rit) =>
+        // layout partition index == shard id (not the task's partition id
+        // once chunks are unioned); when the shard's graph is already
         // resident in the executor cache, its rows are simply never
         // consumed (cached blocks — skipping costs nothing)
-        val shardId = org.apache.spark.TaskContext.getPartitionId()
         VectorIndex.probePartition(
           rit, iid, shardId, p, bcMeta.value, bcQueries.value, k, searchWidth)
       }
-      spark.createDataset(rdd).toDF("query_id", "distance", "neighbor_id")
-    }.toSeq
-
-    TopK.topKMerge(candidateChunks.reduce(_ union _), k)
+    }.reduce(_ union _)
+    VectorIndex.mergeShardTopK(spark, candidates, k, numShards)
   }
 
   /** Probe the same query batch at SEVERAL beam widths in one pass —
@@ -385,37 +380,35 @@ class VectorIndex private (
       return spark.emptyDataset[(Int, Long, Int, Long, Double)]
         .toDF("search_width", "query_id", "rank", "neighbor_id", "distance")
     }
-    val bcMeta = spark.sparkContext.broadcast(meta.map(m => m.sub_index_id -> m).toMap)
+    val bcMeta = metaBc
     val p = params
     val iid = indexId
     val widthArr = widths.toArray
     val normed = batch.map { case (id, v) => (id, normalizeQuery(v)) }
     // width index rides in the low bits of a synthetic query id so the
     // per-(query, width) top-k merge reuses the scalar machinery
-    val candidateChunks = normed.grouped(math.max(maxBatch, 1)).map { chunk =>
+    val candidates = normed.grouped(math.max(maxBatch, 1)).map { chunk =>
       val bcQueries = spark.sparkContext.broadcast(chunk)
-      val rdd = probeLayout.mapPartitions { rit =>
-        val shardId = org.apache.spark.TaskContext.getPartitionId()
+      probeLayout.mapPartitionsWithIndex { (shardId, rit) =>
         val g = VectorIndex.shardGraphFor(rit, iid, shardId, p, bcMeta.value)
         if (g == null) Iterator.empty
         else {
           val graph = g
           graph.synchronized {
-            bcQueries.value.toArray.flatMap { case (qid, qvec) =>
-              widthArr.indices.flatMap { wi =>
+            bcQueries.value.flatMap { case (qid, qvec) =>
+              widthArr.indices.map { wi =>
                 val sw = widthArr(wi)
                 val topk =
                   if (sw <= 0) graph.bruteForceTopK(qvec, k)
                   else graph.queryTopK(qvec, k, sw)
-                topk.map { case (d, gid) => (qid * w + wi, d, gid) }
+                (qid * w + wi, VectorIndex.shardTopK(topk))
               }
             }.iterator
           }
         }
       }
-      spark.createDataset(rdd).toDF("query_id", "distance", "neighbor_id")
-    }.toSeq
-    TopK.topKMerge(candidateChunks.reduce(_ union _), k)
+    }.reduce(_ union _)
+    VectorIndex.mergeShardTopK(spark, candidates, k, numShards)
       .select(
         element_at(typedLit(widthArr), (col("query_id") % w).cast("int") + 1)
           .as("search_width"),
@@ -489,17 +482,17 @@ class VectorIndex private (
     (w, curve)
   }
 
-  /** Probe-ready layout shared by the broadcast and shuffled probes:
-    * partition i holds exactly shard i's rows (ShardPartitioner maps the
-    * shard id to itself), cached ONCE per index — the exchange happens on
-    * first probe, not once per query call, and both probe paths read the
-    * same cached blocks. */
   /** Set by [[VectorIndex.load]] when the snapshot carries a
     * [[VectorIndex.relayoutSharded]] layout — [[probeLayout]] then
     * builds shard-aligned partitions by a NARROW scan instead of the
     * corpus-sized shuffle. */
   @transient private[graft] var shardedLayoutDir: Option[String] = None
 
+  /** Probe-ready layout shared by the broadcast and shuffled probes:
+    * partition i holds exactly shard i's rows (ShardPartitioner maps the
+    * shard id to itself), cached ONCE per index — the exchange happens on
+    * first probe, not once per query call, and both probe paths read the
+    * same cached blocks. */
   @transient private[graft] lazy val probeLayout
       : org.apache.spark.rdd.RDD[IndexRow] = {
     // FAST PATH — dir-sharded snapshot layout (rows_sharded/, one file
@@ -535,16 +528,26 @@ class VectorIndex private (
     * no `toLocalIterator` transit, so the batch may be arbitrarily large
     * (each task holds one shard's graph plus a bounded query group).
     * Each query is replicated to every shard (the same data volume a
-    * broadcast ships to every executor), probed per shard, and reduced by
-    * the usual partial/final top-k merge. Results are identical to
+    * broadcast ships to every executor), probed per shard, and merged by
+    * [[VectorIndex.mergeShardTopK]] like every probe. Results are identical to
     * [[query]] — gated by spec. Prefer [[query]] for small batches (one
     * broadcast beats a |Q| x shards shuffle when |Q| is tiny). */
-  def queryDistributed(queries: DataFrame, k: Int, searchWidth: Int,
-      live: Long => Boolean = null): DataFrame = {
+  def queryDistributed(queries: DataFrame, k: Int, searchWidth: Int): DataFrame = {
+    val spark = rows.sparkSession
+    VectorIndex.mergeShardTopK(spark, distributedCandidates(queries, k, searchWidth),
+      k, VectorIndex.distributedMergeParts(spark, numShards))
+  }
+
+  /** The per-shard top-k records of [[queryDistributed]], before the
+    * merge — the LSM driverless probe unions every member's records into
+    * one merge. `live` is the kernel liveness filter (null = all live). */
+  private[index] def distributedCandidates(queries: DataFrame, k: Int,
+      searchWidth: Int, live: Long => Boolean = null)
+      : org.apache.spark.rdd.RDD[(Long, VectorIndex.ShardTopK)] = {
     val spark = rows.sparkSession
     import spark.implicits._
     val n = numShards
-    val bcMeta = spark.sparkContext.broadcast(meta.map(m => m.sub_index_id -> m).toMap)
+    val bcMeta = metaBc
     val p = params
     val iid = indexId
     val qPairs = queries
@@ -553,12 +556,14 @@ class VectorIndex private (
       .map { case (id, v) => (id, p.transformQueryVector(v)) }
       .flatMap(q => Iterator.range(0, n).map(s => (s, q)))
       .partitionBy(new VectorIndex.ShardPartitioner(n))
-      .map(_._2)
-    val candidates = probeLayout.zipPartitions(qPairs, preservesPartitioning = false) {
-      (rit, qit) =>
+    probeLayout.zipPartitions(qPairs, preservesPartitioning = false) {
+      (rit, keyed) =>
+        val qit = keyed.buffered
         if (!qit.hasNext) Iterator.empty
         else {
-          val shardId = org.apache.spark.TaskContext.getPartitionId()
+          // the shuffle key is the shard id (the task's partition id is
+          // not, once the LSM probe unions several members' candidates)
+          val shardId = qit.head._1
           val g = VectorIndex.shardGraphFor(rit, iid, shardId, p, bcMeta.value)
           if (g == null) Iterator.empty // shard holds no vectors
           else {
@@ -568,50 +573,17 @@ class VectorIndex private (
             // graph lock (the iterator must not escape the lock lazily)
             qit.grouped(2048).flatMap { group =>
               graph.synchronized {
-                group.iterator.flatMap { case (qid, qvec) =>
+                group.map { case (_, (qid, qvec)) =>
                   val topk =
                     if (searchWidth <= 0) graph.bruteForceTopK(qvec, k, live)
                     else graph.queryTopK(qvec, k, searchWidth, live)
-                  topk.iterator.map { case (d, gid) => (qid, (d, gid)) }
-                }.toArray
+                  (qid, VectorIndex.shardTopK(topk))
+                }
               }
             }
           }
         }
     }
-    // Reduce-side-only top-k merge. A map-side partial top-k is pure
-    // overhead here: each probe task already emits AT MOST k candidates
-    // per (query, shard), so partial aggregation shrinks nothing — it
-    // only materializes |queries-in-task| aggregation state (at 10^6
-    // queries that is a million-key hash map per task, which falls back
-    // to sort-based aggregation over the full candidate stream and OOMs
-    // long before the shuffle would). With mapSideCombine=false the
-    // candidate rows stream straight into the shuffle writer, and the
-    // reduce side builds one bounded TopKBuffer per query — memory
-    // O(queries-per-reduce-task x k), independent of shard count.
-    val mergeParts = math.max(
-      spark.conf.get("spark.sql.shuffle.partitions", n.toString).toInt, n)
-    val merged = candidates
-      .combineByKeyWithClassTag[graft.operators.TopKBuffer](
-        createCombiner = (v: (Double, Long)) => {
-          val b = new graft.operators.TopKBuffer(k); b.insert(v._1, v._2); b
-        },
-        mergeValue = (b: graft.operators.TopKBuffer, v: (Double, Long)) => {
-          b.insert(v._1, v._2); b
-        },
-        mergeCombiners = (a: graft.operators.TopKBuffer, b: graft.operators.TopKBuffer) => {
-          a.merge(b); a
-        },
-        partitioner = new org.apache.spark.HashPartitioner(mergeParts),
-        mapSideCombine = false)
-      .flatMap { case (qid, buf) =>
-        buf.sortedPairs.iterator.zipWithIndex.map {
-          case ((d, gid), i) => (qid, i + 1, gid, d)
-        }
-      }
-    merged.toDF("query_id", "rank", "neighbor_id", "distance")
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("neighbor_id"), col("distance"))
   }
 
   /** Batch append: rebuild only the shards that receive new vectors
@@ -810,12 +782,6 @@ object VectorIndex {
     (hits.toMap.withDefaultValue(0), gt.size)
   }
 
-  /** One shard's probe: rehydrate (or cache-hit) the graph from the
-    * partition's rows and run every query of the broadcast batch against
-    * it — the per-partition body shared by the broadcast probe and the
-    * fused multi-member LSM probe. The graph carries reusable search
-    * scratch, so probes serialize on it and materialize INSIDE the lock
-    * (a lazy iterator would escape it). */
   /** Resolve the resident graph for a shard, rehydrating STREAMING from
     * the row iterator on a cache miss (one row live at a time — never a
     * materialized row buffer beside the graph; the buffered form OOM'd
@@ -841,24 +807,124 @@ object VectorIndex {
     }
   }
 
+  /** One shard's probe: rehydrate (or cache-hit) the graph from the
+    * partition's rows and run every query of the broadcast batch against
+    * it — the per-partition body shared by the broadcast probe and the
+    * fused multi-member LSM probe. The graph carries reusable search
+    * scratch, so probes serialize on it and materialize INSIDE the lock
+    * (a lazy iterator would escape it). Emits one [[ShardTopK]] record
+    * per query. */
   private[index] def probePartition(
       rit: Iterator[IndexRow], iid: String, shardId: Int, params: IndexParams,
       metaMap: Map[Int, ShardMeta], queries: Array[(Long, Array[Float])],
       k: Int, searchWidth: Int,
-      live: Long => Boolean = null): Iterator[(Long, Double, Long)] = {
+      live: Long => Boolean = null): Iterator[(Long, ShardTopK)] = {
     val g = shardGraphFor(rit, iid, shardId, params, metaMap)
     if (g == null) Iterator.empty // shard holds no vectors
     else {
       val graph = g
       graph.synchronized {
-        queries.toArray.flatMap { case (qid, qvec) =>
+        queries.map { case (qid, qvec) =>
           val topk =
             if (searchWidth <= 0) graph.bruteForceTopK(qvec, k, live)
             else graph.queryTopK(qvec, k, searchWidth, live)
-          topk.map { case (d, gid) => (qid, d, gid) }
+          (qid, shardTopK(topk))
         }.iterator
       }
     }
+  }
+
+  /** One shard's top-k for one query as primitive arrays (distances, ids),
+    * ascending by (distance, id) — the record a probe task emits per query
+    * into [[mergeShardTopK]]. */
+  private[graft] type ShardTopK = (Array[Double], Array[Long])
+
+  private[index] def shardTopK(topk: Array[(Double, Long)]): ShardTopK =
+    (topk.map(_._1), topk.map(_._2))
+
+  /** The empty probe result, with the schema of [[mergeShardTopK]]. */
+  private[index] def emptyResult(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    spark.emptyDataset[(Long, Int, Long, Double)]
+      .toDF("query_id", "rank", "neighbor_id", "distance")
+  }
+
+  /** Name of the RDD every probe's final merge produces: a probe shows as
+    * `Scan ann_probe_merge` in a physical plan. */
+  val ProbeMergeName = "ann_probe_merge"
+
+  /** The final merge every probe path ends in (the reference's multi-shard
+    * merge, dehnsw.h:572-580: per-shard bounded top-k merged and truncated
+    * to k): one RDD shuffle by query id folds a query's [[ShardTopK]]
+    * records into one bounded [[TopKBuffer]] and drains it
+    * as ranked (query_id, rank, neighbor_id, distance) rows, ascending by
+    * (distance, id) — the rows, ranks, tie order and schema of
+    * [[graft.operators.TopK.topKMerge]] over the same candidates
+    * (spec-gated), without its SQL aggregate, posexplode and extra
+    * adaptive-execution job. Lazy: nothing runs until the result is used.
+    *
+    * Reduce-side only: each probe task already emits ONE record per query,
+    * so a map-side combine shrinks nothing — it would only build a
+    * |queries-in-task| hash map per task (a million-key map at 10^6
+    * queries). The reduce side holds one TopKBuffer per query, memory
+    * O(queries-per-reduce-task x k), independent of the shard count. */
+  private[graft] def mergeShardTopK(spark: SparkSession,
+      candidates: org.apache.spark.rdd.RDD[(Long, ShardTopK)], k: Int,
+      partitions: Int): DataFrame = {
+    import spark.implicits._
+    def fold(b: TopKBuffer, c: ShardTopK) = {
+      var i = 0
+      while (i < c._1.length) { b.insert(c._1(i), c._2(i)); i += 1 }
+      b
+    }
+    candidates
+      .combineByKeyWithClassTag[TopKBuffer](
+        createCombiner = (c: ShardTopK) => fold(new TopKBuffer(k), c),
+        mergeValue = fold _,
+        mergeCombiners = (a: TopKBuffer, b: TopKBuffer) => { a.merge(b); a },
+        partitioner = new org.apache.spark.HashPartitioner(math.max(partitions, 1)),
+        mapSideCombine = false)
+      .flatMap { case (qid, buf) =>
+        buf.sortedPairs.iterator.zipWithIndex.map {
+          case ((d, gid), i) => (qid, i + 1, gid, d)
+        }
+      }
+      .setName(ProbeMergeName)
+      .toDF("query_id", "rank", "neighbor_id", "distance")
+  }
+
+  /** Merge partitions of a driverless probe: the session's shuffle
+    * partitions, at least one per shard (its batch is unbounded). */
+  private[index] def distributedMergeParts(spark: SparkSession, shards: Int): Int =
+    math.max(spark.conf.get("spark.sql.shuffle.partitions", shards.toString).toInt, shards)
+
+  /** Route a query frame (query_id, embedding) to the broadcast probe
+    * (`broadcastProbe`, given the batch sorted by query id) when it holds
+    * at most maxBatch rows, else to the driverless probe. A driver-local
+    * frame — its optimized plan is a LocalRelation, e.g. built from a
+    * Seq — is read straight from the plan: its rows are already on the
+    * driver, so routing runs no job. Any other frame pays a count over
+    * its ids only (column-pruned scan, bounded at maxBatch+1; counting
+    * collected rows would ship up to maxBatch query VECTORS to the driver
+    * just to count them), then one more (full) collect when small.
+    * Big batches never transit the driver at all — the driverless
+    * shuffled probe is also ~3x faster than chunked broadcasts at 200k
+    * queries. */
+  private[index] def routeQueries(queries: DataFrame, maxBatch: Int)(
+      broadcastProbe: Array[(Long, Array[Float])] => DataFrame)(
+      distributedProbe: => DataFrame): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val qds = queries
+      .select(col("query_id").cast("long"), col("embedding"))
+      .as[(Long, Array[Float])]
+    val rowCount = qds.queryExecution.optimizedPlan match {
+      case local: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        local.data.size.toLong
+      case _ => qds.select(col("query_id")).limit(maxBatch + 1).count()
+    }
+    if (rowCount <= maxBatch) broadcastProbe(qds.collect().sortBy(_._1))
+    else distributedProbe
   }
 
   /** Small-file IO through the Hadoop FS API so index metadata lands on
@@ -1374,7 +1440,7 @@ object VectorIndex {
 
   /** Narrow re-indexing of a one-file-per-shard scan so that partition
     * index == shard id — the property every probe consumer relies on
-    * (TaskContext.getPartitionId as the shard, [[VectorIndex
+    * (the layout's partition index as the shard, [[VectorIndex
     * .queryDistributed]]'s zipPartitions against [[ShardPartitioner]]-
     * partitioned queries). Purity is enforced per ROW (a mis-packed
     * file partition would otherwise hydrate a graph from another

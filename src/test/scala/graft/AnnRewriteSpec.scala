@@ -22,6 +22,13 @@ class AnnRewriteSpec extends AnyFunSuite with SparkSuite {
     IndexCatalog.register(index, corpus)
   }
 
+  /** The optimized plan scans an index probe's top-k merge. */
+  private def probesIndex(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case e: org.apache.spark.sql.execution.ExternalRDD[_]
+          if e.rdd.name == VectorIndex.ProbeMergeName => e
+    }.nonEmpty
+
   private def qvec: Array[Float] = Tables.embeddings(spark, sfDir)
     .filter(col("vec_id") === 0).select(col("embedding"))
     .head.getSeq[Float](0).toArray
@@ -56,7 +63,7 @@ class AnnRewriteSpec extends AnyFunSuite with SparkSuite {
       .withColumn("flag", lit(1))
     // the outer projection is pushed below the limit by the optimizer —
     // the rewrite must still fire through that shape
-    assert(outer.queryExecution.optimizedPlan.toString.contains("topk_by_distance"))
+    assert(probesIndex(outer))
     val rows = outer.collect()
     assert(rows.length === 5)
     // ascending distances — the trailing sort preserved the contract
@@ -87,7 +94,7 @@ class AnnRewriteSpec extends AnyFunSuite with SparkSuite {
       .orderBy(col("distance"), col("neighbor_id"))
       .limit(k)
     val df = plan(10)
-    assert(df.queryExecution.optimizedPlan.toString.contains("topk_by_distance"),
+    assert(probesIndex(df),
       s"LSM probe not spliced in:\n${df.queryExecution.optimizedPlan.toString.take(2000)}")
     val got = df.collect().map(r => (r.getLong(0), r.getDouble(1)))
     IndexCatalog.clear()
@@ -166,11 +173,11 @@ class AnnRewriteSpec extends AnyFunSuite with SparkSuite {
         VectorFunctions.squaredL2(col("embedding"), lit(qvec)).as("distance"))
       .orderBy(col("distance").desc)
       .limit(10)
-    assert(!desc.queryExecution.optimizedPlan.toString.contains("topk_by_distance"))
+    assert(!probesIndex(desc))
 
     // unregistered catalog: neither the probe nor the fused path fires
     IndexCatalog.clear()
-    assert(!topKPlan(10).queryExecution.optimizedPlan.toString.contains("topk_by_distance"))
+    assert(!probesIndex(topKPlan(10)))
     val filtered = corpus.filter(col("id") % 3 === 0)
       .select(col("id").as("neighbor_id"),
         VectorFunctions.squaredL2(col("embedding"), lit(qvec)).as("distance"))
@@ -188,7 +195,7 @@ class AnnRewriteSpec extends AnyFunSuite with SparkSuite {
     val df = spark.sql(s"""
       SELECT id AS neighbor_id, vec_l2sq(embedding, $lit64) AS distance
       FROM rw_corpus ORDER BY distance, neighbor_id LIMIT 10""")
-    assert(df.queryExecution.optimizedPlan.toString.contains("topk_by_distance"),
+    assert(probesIndex(df),
       "SQL-text plan over the registered corpus view must rewrite to the probe")
     val viaSql = df.collect().map(_.getLong(0))
     val viaApi = topKPlan(10).collect().map(_.getLong(0))
@@ -238,7 +245,7 @@ class AnnRewriteSpec extends AnyFunSuite with SparkSuite {
     IndexCatalog.register(index, corpus)
     try {
       val l2 = topKPlan(10)
-      assert(l2.queryExecution.optimizedPlan.toString.contains("topk_by_distance"),
+      assert(probesIndex(l2),
         "raw-L2 query must be served by the L2 index despite the cosine registration")
       IndexCatalog.clear()
       val expected = topKPlan(10).collect().map(r => (r.getLong(0), r.getDouble(1)))
